@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.commands.CommandParser
 import graft.rules.{RuleEngine, Rules, RuleStore}
-import graft.streaming.{ActionSink, NdjsonIngest}
+import graft.streaming.{ActionSink, DelayedDispatcher, NdjsonIngest}
 import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
 
 /** The reference program (main.rs:13-54) as ONE supervised composition —
@@ -22,8 +22,9 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *     rule FILE each micro-batch (commands mutate it concurrently — a
   *     stream-static join would pin the file listing at plan time, the
   *     RecoverySpec finding), matches via the broadcast rule join, and
-  *     dispatches through [[ActionSink.dispatchDelayedBatch]] (the
-  *     randomized 30–100 s hold, effectively-once).
+  *     dispatches through one [[DelayedDispatcher]] built at start (the
+  *     randomized 30–100 s hold, effectively-once; it reads the pending
+  *     and dispatch logs once per start, then only appends to them).
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
   *     by [[commandDispatcher]] against the same rules file.
@@ -184,6 +185,16 @@ object GraftApp {
     val stop = new AtomicBoolean(false)
     val client = new ZulipClient(conf, zulipBaseUrlOverride)
 
+    // the held actions: recovered from the logs once, here; each batch
+    // then only appends to them
+    val dispatcher = new DelayedDispatcher(spark, pendingDir, logDir)({ due =>
+      due.collect().foreach { r =>
+        client.postMessage(
+          s"action ${r.getAs[String]("actions")} on ${r.getAs[String]("username")} " +
+            s"(rule ${r.getAs[String]("rule_name")})",
+          conf.zulipNotifyStream, conf.zulipNotifyTopic)
+      }
+    })
     // eventhandler.handle_events: per micro-batch, log events, reload the
     // rule file, match, stamp deadlines, dispatch effectively-once
     val signups = NdjsonIngest.fromHttp(spark, feedUrl)
@@ -203,15 +214,7 @@ object GraftApp {
               col("username"), col("actions"), col("no_delay"), col("ts_us"))
             .withColumn("due_us", col("ts_us") + ActionSink.actionDelayUs(
               col("event_id"), col("actions"), col("no_delay")))
-          ActionSink.dispatchDelayedBatch(spark, matched, batchId, pendingDir,
-            logDir) { fresh =>
-            fresh.collect().foreach { r =>
-              client.postMessage(
-                s"action ${r.getAs[String]("actions")} on ${r.getAs[String]("username")} " +
-                  s"(rule ${r.getAs[String]("rule_name")})",
-                conf.zulipNotifyStream, conf.zulipNotifyTopic)
-            }
-          }
+          dispatcher(matched, batchId)
         } finally { b.unpersist(); rules.unpersist() }
         ()
       }
@@ -223,11 +226,20 @@ object GraftApp {
       silenceRestartMs = zulipSilenceRestartMs, checkMs = zulipCheckMs)
     val zulipThread = supervisor.start(stop)
 
-    // signup::rules::expiry_loop: once-only notices + expired-rule sweep.
-    // The sleep is sliced so shutdown latency is ~200 ms + one in-flight
-    // sweep, not the sweep cadence (an hourly-config sweep would otherwise
-    // blow through shutdown's 120 s join and read as a wedged writer).
-    val expiryThread = new Thread(() => {
+    val expiryThread = startExpirySweep(spark, rulesPath, client, conf, sweepMs, stop)
+
+    Handles(events, zulipThread, expiryThread, stop)
+  }
+
+  /** signup::rules::expiry_loop: once-only notices + expired-rule sweep,
+    * every `sweepMs` until `stop` is set. A sweep that fails is posted to
+    * the notify stream (and stderr), then the next sweep runs as usual.
+    * The sleep is sliced so shutdown latency is ~200 ms + one in-flight
+    * sweep, not the sweep cadence (an hourly-config sweep would otherwise
+    * blow through shutdown's 120 s join and read as a wedged writer). */
+  private[graft] def startExpirySweep(spark: SparkSession, rulesPath: String,
+      client: ZulipClient, conf: ZulipConf, sweepMs: Long, stop: AtomicBoolean): Thread = {
+    val t = new Thread(() => {
       while (!stop.get()) {
         val end = System.currentTimeMillis() + sweepMs
         var left = sweepMs
@@ -255,14 +267,15 @@ object GraftApp {
             }
           } catch {
             case e: Exception =>
-              System.err.println(s"expiry sweep failed: ${e.getMessage}")
+              val msg = s"expiry sweep failed: ${e.getMessage}"
+              System.err.println(msg)
+              client.postMessage(msg, conf.zulipNotifyStream, conf.zulipNotifyTopic)
           }
         }
       }
     }, "graft-expiry")
-    expiryThread.setDaemon(true)
-    expiryThread.start()
-
-    Handles(events, zulipThread, expiryThread, stop)
+    t.setDaemon(true)
+    t.start()
+    t
   }
 }

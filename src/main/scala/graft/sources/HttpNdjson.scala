@@ -1,12 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.net.{HttpURLConnection, URI}
+import java.io.{BufferedReader, FilterInputStream, InputStream, InputStreamReader, IOException}
+import java.net.{HttpURLConnection, SocketTimeoutException, URI}
 import java.nio.charset.StandardCharsets
 import java.util
 import javax.annotation.concurrent.GuardedBy
 
+import scala.annotation.tailrec
 import scala.collection.mutable.ListBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
@@ -78,7 +80,8 @@ class HttpNdjsonTable(options: CaseInsensitiveStringMap) extends Table with Supp
             reconnectDelayMs = options.getLong("reconnectDelayMs", 7000L),
             // silent-stream watchdog (status.rs: restart if no event for
             // 90 s): a read blocked longer than this times out and the
-            // reader reconnects. 0 = wait forever.
+            // reader reconnects. 0 = wait forever for body data; each wait
+            // for the response headers is bounded at 1 s either way.
             readTimeoutMs = options.getLong("silenceTimeoutMs",
               options.getLong("readTimeoutMs", 0L)).toInt,
             numPartitions = options.getInt("numPartitions", 2),
@@ -127,7 +130,12 @@ class HttpNdjsonMicroBatchStream(
   @volatile private var stopped = false
   @volatile private var lastError: Throwable = _
   @volatile private var consecutiveFailures = 0
-  @volatile private var conn: HttpURLConnection = _
+  @volatile private var restartRequested = false
+
+  // Every wait for data wakes after at most this long, so the reader itself
+  // notices stop() and watchdog restarts (see [[PolledStream]]). It also
+  // bounds each wait for the response headers.
+  private val pollMs = if (readTimeoutMs > 0) math.min(readTimeoutMs, 1000) else 1000
 
   /** Reconnect count — observable for tests and monitoring. */
   def connectCount: Int = lock.synchronized(connects)
@@ -156,8 +164,7 @@ class HttpNdjsonMicroBatchStream(
               "restarting event stream watcher")
             silenceRestartsCount += 1
             lastEventAtMs = System.currentTimeMillis() // status.rs:38 resets the clock
-            val c = conn
-            if (c != null) c.disconnect() // reader loop reconnects after backoff
+            restartRequested = true // reader loop reconnects after backoff
           }
         }
       }
@@ -169,12 +176,12 @@ class HttpNdjsonMicroBatchStream(
       while (!stopped) {
         try {
           val c = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
-          conn = c
-          c.setReadTimeout(readTimeoutMs)
+          c.setReadTimeout(pollMs)
           c.setRequestProperty("Accept",
             if (sse) "text/event-stream" else "application/x-ndjson")
+          restartRequested = false
           val in = new BufferedReader(
-            new InputStreamReader(c.getInputStream, StandardCharsets.UTF_8))
+            new InputStreamReader(new PolledStream(c.getInputStream), StandardCharsets.UTF_8))
           lock.synchronized { connects += 1 }
           consecutiveFailures = 0
           lastEventAtMs = System.currentTimeMillis() // fresh connection, fresh clock
@@ -208,10 +215,43 @@ class HttpNdjsonMicroBatchStream(
             // reads as merely idle
             logWarning(s"http-ndjson connect/read failed (will retry in " +
               s"$reconnectDelayMs ms): $e")
+          case NonFatal(_) => () // stop() ended the read
         }
         // stream ended or failed: the reference retries after a fixed pause
-        if (!stopped) Thread.sleep(reconnectDelayMs)
+        if (!stopped) {
+          try Thread.sleep(reconnectDelayMs)
+          catch { case _: InterruptedException => () } // stop(): the loop ends
+        }
       }
+    }
+  }
+
+  /** The response body, read so that a wait for data wakes every `pollMs`
+    * and then gives up if the source stopped, the watchdog asked for a
+    * restart, or no byte arrived for `readTimeoutMs`, and waits on
+    * otherwise (HttpURLConnection's stream survives a timed-out read). The
+    * reader thus never needs another thread to disconnect it: that
+    * `disconnect()` would wait for the chunked stream's lock, which a read
+    * blocked on a silent open feed holds, so it hung stop(). */
+  private final class PolledStream(in: InputStream) extends FilterInputStream(in) {
+    private var lastByteAtMs = System.currentTimeMillis()
+
+    override def read(): Int = {
+      val b = new Array[Byte](1)
+      if (read(b, 0, 1) < 0) -1 else b(0) & 0xff
+    }
+
+    @tailrec override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (stopped) throw new IOException("http-ndjson source stopped")
+      if (restartRequested) throw new IOException(s"no event for >$silenceRestartMs ms")
+      val n =
+        try in.read(b, off, len)
+        catch {
+          case _: SocketTimeoutException if readTimeoutMs <= 0 ||
+              System.currentTimeMillis() - lastByteAtMs < readTimeoutMs => -2
+        }
+      if (n == -2) read(b, off, len)
+      else { lastByteAtMs = System.currentTimeMillis(); n }
     }
   }
   // Resume the line numbering where the previous process stopped — BEFORE
@@ -475,10 +515,8 @@ class HttpNdjsonMicroBatchStream(
   }
 
   override def stop(): Unit = {
-    stopped = true
-    val c = conn
-    if (c != null) c.disconnect() // unblocks a blocked readLine
-    reader.interrupt()
+    stopped = true // a blocked read sees this within pollMs
+    reader.interrupt() // ends a backoff sleep
     watchdog.foreach(_.interrupt())
   }
 }

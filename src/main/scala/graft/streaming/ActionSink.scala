@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Effectively-once action dispatch — the reference's rule-action firing
   * (rules.rs:286-331: matched signup → mod-API endpoint call, optionally
@@ -19,6 +23,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * where a duplicate POST is harmless and a LOST one is not; logging first
   * would invert that into at-most-once). The log carries `batch_id` as the
   * audit trail the reference keeps implicitly in Zulip history.
+  * [[dispatchDelayed]] keeps the same guarantees over a pending log and the
+  * dispatch log, but reads them once per start ([[DelayedDispatcher]]).
   *
   * `act` stands in for the HTTP call (the reference's POST to the mod API);
   * it receives only rows never dispatched before.
@@ -60,59 +66,132 @@ object ActionSink {
     * acted on once the event-time clock (max `ts_us` staged so far — the
     * stream's own watermark) passes their `due_us` deadline. This executes
     * the reference's randomized hold (eventhandler.rs:180-186 sleeps the
-    * spawned action task) without parking threads: at 100 TB the pending
-    * set is a partitioned parquet log and each micro-batch does one
-    * bounded anti-join + one due-filter, both pushed to the scan.
+    * spawned action task) without parking threads, through one
+    * [[DelayedDispatcher]] built before the query starts.
     *
     * `matched` must carry `event_id`, `rule_name`, `ts_us`, and `due_us`
     * (= ts_us + [[actionDelayUs]]). Like the reference, an action with an
-    * unreached deadline survives a crash: it is re-staged from the pending
+    * unreached deadline survives a crash: it is recovered from the pending
     * log, not lost with the process. A tail event whose deadline no later
     * event ever passes dispatches on the next batch after one arrives —
     * the event-time clock is the batch analog of wall-clock sleeping. */
   def dispatchDelayed(spark: SparkSession, matched: DataFrame, pendingDir: String,
-      logDir: String, checkpointDir: String)(act: DataFrame => Unit): StreamingQuery =
+      logDir: String, checkpointDir: String)(act: DataFrame => Unit): StreamingQuery = {
+    val dispatcher = new DelayedDispatcher(spark, pendingDir, logDir)(act)
     matched.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dispatchDelayedBatch(spark, batch, batchId, pendingDir, logDir)(act)
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => dispatcher(batch, batchId) }
       .start()
+  }
 
-  /** One micro-batch of the delayed dispatch — exposed so a composition
-    * that must recompute per-batch state FIRST (GraftApp reloads the rule
-    * dim inside its own foreachBatch — a stream-static join would pin the
-    * rules file listing at plan time, the RecoverySpec finding) can reuse
-    * the staging/clock/dispatch contract verbatim. */
-  def dispatchDelayedBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-      pendingDir: String, logDir: String)(act: DataFrame => Unit): Unit = {
-    // stage fresh rows (replay-idempotent: anti-join the pending log)
-    undispatched(spark, batch, pendingDir).write.mode("append").parquet(pendingDir)
-    val pending = spark.read.parquet(pendingDir)
-    val clockRow = pending.agg(max(col("ts_us"))).head
-    if (!clockRow.isNullAt(0)) { // an all-empty pending log has no clock yet
-      val due = pending.filter(col("due_us") <= clockRow.getLong(0))
-      val fresh = undispatched(spark, due, logDir)
-        .persist() // evaluated twice: act + log append
-      try {
-        act(fresh)
-        fresh.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(logDir)
-      } finally fresh.unpersist()
+  /** Whether `dir` holds a committed data file. A log whose first append
+    * died before its job commit holds only `_temporary` (hidden from Spark's
+    * file index), so it has no rows and no schema to infer: it is empty.
+    * Any other failure to list it propagates — a transient IO error must
+    * not silently re-arm every past action. */
+  private[streaming] def hasData(spark: SparkSession, dir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(path) && fs.listStatus(path).exists { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
     }
-    ()
   }
 
   /** Rows of `batch` not yet in the dispatch log (dedup within the batch,
-    * then anti-join against the log). Only a genuinely ABSENT log means
-    * "everything is fresh" — a transient read failure (IO error, corrupt
-    * footer) must propagate, not silently re-arm every past action. */
+    * then anti-join against the log). Only a log with no committed data
+    * file means "everything is fresh" — a transient read failure (IO error,
+    * corrupt footer) must propagate, not silently re-arm every past action. */
   def undispatched(spark: SparkSession, batch: DataFrame, logDir: String): DataFrame = {
     val deduped = batch.dropDuplicates("event_id", "rule_name")
-    val path = new org.apache.hadoop.fs.Path(logDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) return deduped // no log yet: everything is fresh
+    if (!hasData(spark, logDir)) return deduped // no log yet: everything is fresh
     val logged = spark.read.parquet(logDir).select(col("event_id"), col("rule_name"))
     deduped.join(logged, Seq("event_id", "rule_name"), "left_anti")
+  }
+}
+
+/** The state of one delayed-dispatch query, recovered ONCE and then only
+  * appended to — the reference's in-memory action timers
+  * (eventhandler.rs:180-186), made durable by two append-only parquet logs:
+  * `pendingDir` (every staged row) and `logDir` (every dispatched row, with
+  * its `batch_id`).
+  *
+  * Construction reads both logs once and recovers three things: the staged
+  * `(event_id, rule_name)` keys, the waiting rows (staged, never
+  * dispatched), and the event-time clock (max staged `ts_us`). After that a
+  * micro-batch reads no log. It collects its rows once, dedupes them by key
+  * on the driver, appends the never-staged ones to `pendingDir` as one
+  * file, advances the clock, picks the due rows from the waiting rows in
+  * memory, calls `act` on them and appends them to `logDir` as one file.
+  * Memory changes only after each write has succeeded, so at every step the
+  * logs are at least as far as memory and a crash recovers from them:
+  *   - a replayed batch finds its rows staged and stages nothing;
+  *   - a row staged but not dispatched is waiting again after a restart;
+  *   - a crash between `act` and the dispatch-log append re-dispatches that
+  *     batch's due rows once on restart (dispatch-then-log keeps
+  *     at-least-once, as [[ActionSink]] documents), never again after.
+  *
+  * Memory is the staged-key set, which grows as fast as the pending log
+  * already does, plus the waiting rows: at most rate × the longest hold.
+  * A dispatcher serves one query; it is not thread-safe.
+  */
+final class DelayedDispatcher(spark: SparkSession, pendingDir: String, logDir: String)(
+    act: DataFrame => Unit) {
+  private type Key = (Long, String)
+  private def key(r: Row): Key = (r.getAs[Long]("event_id"), r.getAs[String]("rule_name"))
+
+  private val staged = mutable.HashSet.empty[Key]
+  private val waiting = mutable.LinkedHashMap.empty[Key, Row]
+  private var clock = Long.MinValue // max staged ts_us; nothing staged, nothing due
+  // the pending rows' layout: the log's if there is one, else the first batch's
+  private var schema: Option[StructType] = None
+
+  locally {
+    if (ActionSink.hasData(spark, pendingDir)) {
+      val pending = spark.read.parquet(pendingDir)
+      val rows = pending.collect()
+      val dispatched =
+        if (!ActionSink.hasData(spark, logDir)) Set.empty[Key]
+        else spark.read.parquet(logDir).select("event_id", "rule_name").collect()
+          .iterator.map(key).toSet
+      schema = Some(pending.schema)
+      rows.foreach { r =>
+        val k = key(r)
+        staged += k
+        if (!dispatched(k)) waiting(k) = r
+        clock = math.max(clock, r.getAs[Long]("ts_us"))
+      }
+    }
+  }
+
+  private def local(rows: Iterable[Row], s: StructType): DataFrame =
+    spark.createDataFrame(rows.toSeq.asJava, s)
+
+  // one file per append: local rows would otherwise be split across cores
+  private def append(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("append").parquet(dir)
+
+  /** Stage one micro-batch and dispatch whatever it makes due. */
+  def apply(batch: DataFrame, batchId: Long): Unit = {
+    val s = schema.getOrElse(batch.schema)
+    val fresh = mutable.LinkedHashMap.empty[Key, Row]
+    batch.select(s.fieldNames.map(col).toSeq: _*).collect().foreach { r =>
+      val k = key(r)
+      if (!staged(k) && !fresh.contains(k)) fresh(k) = r
+    }
+    if (fresh.nonEmpty) {
+      append(local(fresh.values, s), pendingDir)
+      schema = Some(s)
+      staged ++= fresh.keys
+      waiting ++= fresh
+      clock = math.max(clock, fresh.values.map(_.getAs[Long]("ts_us")).max)
+    }
+    val due = waiting.filter(_._2.getAs[Long]("due_us") <= clock)
+    if (due.nonEmpty) {
+      val rows = local(due.values, s)
+      act(rows)
+      append(rows.withColumn("batch_id", lit(batchId)), logDir)
+      waiting --= due.keys
+    }
   }
 }

@@ -145,4 +145,53 @@ class GraftAppSpec extends AnyFunSuite {
       .select("name").collect().map(_.getString(0)).toSet
     assert(names == Set("r_old", "e2e"))
   }
+
+  test("GraftApp: a failed expiry sweep posts one notice to the notify stream") {
+    val work = java.nio.file.Files.createTempDirectory("graft_app_sweep").toString
+    val rulesPath = s"$work/rules.json" // absent: a sweep cannot load the store
+
+    // fake Zulip: the first failure notice also creates the store, before
+    // its reply lets the sweep thread go on, so every later sweep succeeds
+    val posted = new ConcurrentLinkedQueue[String]()
+    val zulip = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
+    zulip.createContext("/api/v1/messages", (ex: HttpExchange) => {
+      try {
+        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        posted.add(body)
+        if (body.contains("content=expiry+sweep+failed"))
+          RuleStore.save(Rules.dfFor(spark, Seq(
+            RuleRow("r_soon", "ip_match", "1.2.3.4", 0, enabled = true, suspOnly = false,
+              noDelay = false, Some(Rules.nowUs + 12L * 3600L * 1000000L), "notify"))),
+            rulesPath)
+        respond(ex, """{"result":"success"}""")
+      } finally ex.close()
+    })
+    zulip.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    zulip.start()
+    val base = s"http://localhost:${zulip.getAddress.getPort}"
+    val conf = ZulipConf.default.copy(rulesPath = rulesPath,
+      zulipNotifyStream = "notify-stream", zulipNotifyTopic = "notify-topic")
+    def all: Seq[String] = posted.toArray(Array.empty[String]).toSeq
+    def recovered = all.exists(_.contains("content=Rule+r_soon%3A+expiring_soon"))
+
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sweeper = GraftApp.startExpirySweep(spark, rulesPath,
+      new graft.zulip.ZulipClient(conf, Some(base)), conf, sweepMs = 300L, stop)
+    try {
+      // the sweep after the failure succeeds and posts its notice; a few
+      // more sweeps then run on the repaired store
+      val deadline = System.currentTimeMillis() + 60000
+      while (!recovered && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      Thread.sleep(1500)
+    } finally {
+      stop.set(true)
+      sweeper.join(60000)
+      zulip.stop(0)
+    }
+    val failures = all.filter(_.contains("content=expiry+sweep+failed"))
+    assert(recovered, s"no sweep succeeded after the failure: $all")
+    assert(failures.size == 1, s"expected one failure notice, got $failures")
+    assert(failures.head.contains("to=notify-stream") &&
+      failures.head.contains("PATH_NOT_FOUND"), s"notice lacks its stream or cause: $failures")
+  }
 }

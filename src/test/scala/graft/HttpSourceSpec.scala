@@ -2,7 +2,10 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
@@ -319,5 +322,38 @@ class HttpSourceSpec extends AnyFunSuite {
       val rows = collectUntil("http_signups", 2, q)
       assert(rows.map(_.getAs[String]("username")).toSet == Set("alice", "carol"))
     } finally { q.stop(); server.stop(0) }
+  }
+
+  test("stop() returns on an open, silent feed and the reader thread exits cleanly") {
+    val release = new CountDownLatch(1)
+    val (server, url) = serve("/quiet") { (_, ex) =>
+      // one line, then the connection stays open and silent
+      ex.sendResponseHeaders(200, 0)
+      val os = ex.getResponseBody
+      os.write("{\"a\":1}\n".getBytes(StandardCharsets.UTF_8)); os.flush()
+      release.await(120, TimeUnit.SECONDS)
+    }
+    val q = spark.readStream.format("http-ndjson")
+      .option("url", url).option("reconnectDelayMs", 100).load()
+      .writeStream.format("memory").queryName("http_quiet").outputMode("append").start()
+    try {
+      assert(collectUntil("http_quiet", 1, q).length == 1)
+      val reader = Thread.getAllStackTraces.keySet.asScala
+        .find(_.getName == s"http-ndjson-$url").get
+      val uncaught = new AtomicReference[Throwable]()
+      reader.setUncaughtExceptionHandler((_, e) => uncaught.set(e))
+      val stopper = new Thread(() => q.stop())
+      stopper.setDaemon(true)
+      stopper.start()
+      stopper.join(10000)
+      assert(!stopper.isAlive, "stop() must return within 10 s while the feed is open")
+      reader.join(10000)
+      assert(!reader.isAlive, "the reader thread must exit once the source stops")
+      assert(uncaught.get == null, s"the reader died with ${uncaught.get}")
+    } finally {
+      release.countDown() // the feed closes first, so a hung stop() still ends
+      q.stop()
+      server.stop(0)
+    }
   }
 }

@@ -1,10 +1,22 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.{ActionSink, DelayedDispatcher}
 
 /** Restart-safety: checkpointed streaming jobs resume without loss or
   * duplication, and the action dispatcher is effectively-once across
@@ -257,5 +269,197 @@ class RecoverySpec extends AnyFunSuite {
       .select("name").collect().map(_.getString(0)).toSet
     assert(names == Set("r1", "r2"))
     assert(fs.exists(hPath) && !fs.exists(hStaged), "swap must be completed")
+  }
+
+  // ---- DelayedDispatcher: recover once, then append only --------------------
+
+  private val spark0 = spark
+  import spark0.implicits._
+
+  /** Matched rows as the live loop stages them: (event_id, rule_name,
+    * action, no_delay, ts_us) plus the deadline `due_us`. */
+  private def matchedRows(rows: (Long, String, String, Boolean, Long)*): DataFrame =
+    rows.toDF("event_id", "rule_name", "action", "no_delay", "ts_us")
+      .withColumn("due_us", col("ts_us") +
+        ActionSink.actionDelayUs(col("event_id"), col("action"), col("no_delay")))
+
+  /** A `DataFrame => Unit` act that records the event ids it was given. */
+  private final class Recorder {
+    val got = new ConcurrentLinkedQueue[Long]()
+    def act(df: DataFrame): Unit = df.select("event_id").as[Long].collect().foreach(got.add)
+    def ids: Seq[Long] = got.asScala.toSeq.sorted
+  }
+
+  private def loggedIds(dir: String): Seq[Long] =
+    spark.read.parquet(dir).select("event_id").as[Long].collect().toSeq.sorted
+
+  private def dataFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  test("DelayedDispatcher: a restart over existing logs recovers staged rows, dispatched keys and the clock") {
+    val pendingDir = tmp("rec_pend") + "/pending"
+    val logDir = tmp("rec_log") + "/log"
+
+    // first process: a delayed close at t=0 (deadline in [31.5, 101.5) s)
+    // stays pending; the undelayed notify at t=10 s dispatches
+    val first = new Recorder
+    new DelayedDispatcher(spark, pendingDir, logDir)(first.act)(
+      matchedRows((1L, "r_close", "close", false, 0L),
+        (2L, "r_notify", "notify", false, 10000000L)), 0L)
+    assert(first.ids == Seq(2L))
+    // ...and a batch that was staged but crashed before its dispatch
+    matchedRows((4L, "r_notify", "notify", true, 5000000L))
+      .write.mode("append").parquet(pendingDir)
+
+    // restart: a fresh dispatcher over the same logs
+    val second = new Recorder
+    val d = new DelayedDispatcher(spark, pendingDir, logDir)(second.act)
+    // the replayed batch plus a new undelayed row at t=20 s: only the new
+    // row stages; the crashed row 4 goes out; the dispatched row 2 does not
+    // re-fire; the recovered clock (now 20 s) keeps close 1 pending
+    d(matchedRows((1L, "r_close", "close", false, 0L),
+      (2L, "r_notify", "notify", false, 10000000L),
+      (3L, "r_notify", "notify", true, 20000000L)), 1L)
+    assert(second.ids == Seq(3L, 4L))
+    // a later event passes close 1's deadline
+    d(matchedRows((5L, "r_notify", "notify", true, 200000000L)), 2L)
+    assert(second.ids == Seq(1L, 3L, 4L, 5L))
+    // a full replay changes nothing
+    d(matchedRows((1L, "r_close", "close", false, 0L),
+      (2L, "r_notify", "notify", false, 10000000L),
+      (3L, "r_notify", "notify", true, 20000000L),
+      (5L, "r_notify", "notify", true, 200000000L)), 3L)
+    assert(second.ids == Seq(1L, 3L, 4L, 5L))
+    assert(loggedIds(logDir) == Seq(1L, 2L, 3L, 4L, 5L), "each key dispatched exactly once")
+    assert(loggedIds(pendingDir) == Seq(1L, 2L, 3L, 4L, 5L), "each key staged exactly once")
+  }
+
+  test("DelayedDispatcher: an act that throws mid-batch re-dispatches that batch once on restart, never after") {
+    val srcDir = tmp("throw_src")
+    val pendingDir = tmp("throw_pend") + "/pending"
+    val logDir = tmp("throw_log") + "/log"
+    val ckpt = tmp("throw_ckpt")
+    def stream() = spark.readStream.schema(matchedRows().schema).parquet(srcDir)
+    val got = new ConcurrentLinkedQueue[Long]()
+
+    matchedRows((1L, "r_notify", "notify", true, 0L), (2L, "r_notify", "notify", true, 0L))
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    // the first post succeeds, the second throws: the query dies mid-act
+    val q1 = ActionSink.dispatchDelayed(spark, stream(), pendingDir, logDir, ckpt) { df =>
+      val ids = df.select("event_id").as[Long].collect().sorted
+      got.add(ids.head)
+      throw new java.io.IOException("mod API down")
+    }
+    try intercept[StreamingQueryException](q1.processAllAvailable()) finally q1.stop()
+    assert(got.asScala.toSeq == Seq(1L))
+
+    // restart on the same checkpoint: the batch re-runs and its rows go out
+    // (row 1 a second time, at-least-once); a later batch never repeats them
+    def run(): Unit = {
+      val q = ActionSink.dispatchDelayed(spark, stream(), pendingDir, logDir, ckpt) { df =>
+        df.select("event_id").as[Long].collect().foreach(got.add)
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    run()
+    matchedRows((3L, "r_notify", "notify", true, 1000000L))
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    run()
+    run()
+    val counts = got.asScala.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(counts == Map(1L -> 2, 2L -> 1, 3L -> 1), s"dispatch counts $counts")
+    assert(loggedIds(logDir) == Seq(1L, 2L, 3L))
+  }
+
+  test("DelayedDispatcher: a log holding only an uncommitted _temporary append counts as empty") {
+    val pendingDir = tmp("tmp_pend") + "/pending"
+    val logDir = tmp("tmp_log") + "/log"
+    // a crash during each log's first append: a task wrote its file under
+    // _temporary, the job never committed. Row 1 is in both leftovers; had
+    // they been read, it would count as dispatched and never go out.
+    Seq(pendingDir, logDir).foreach { dir =>
+      val staged = tmp("tmp_rows")
+      matchedRows((1L, "r_notify", "notify", true, 0L))
+        .withColumn("batch_id", lit(0L)).coalesce(1).write.mode("overwrite").parquet(staged)
+      val part = new java.io.File(staged).listFiles().find(_.getName.startsWith("part-")).get
+      val attempt = java.nio.file.Paths.get(dir, "_temporary", "0", "_temporary", "attempt_0")
+      Files.createDirectories(attempt)
+      Files.copy(part.toPath, attempt.resolve(part.getName))
+    }
+    val rec = new Recorder
+    val d = new DelayedDispatcher(spark, pendingDir, logDir)(rec.act)
+    d(matchedRows((1L, "r_notify", "notify", true, 0L)), 0L)
+    assert(rec.ids == Seq(1L))
+    assert(loggedIds(pendingDir) == Seq(1L) && loggedIds(logDir) == Seq(1L))
+  }
+
+  /** Every successful Spark action, in delivery order: the paths it read,
+    * the paths it wrote, and the data files its write added. */
+  private final class IoLog extends QueryExecutionListener with AdaptiveSparkPlanHelper {
+    val events = new ConcurrentLinkedQueue[(Seq[String], Seq[String], Long)]()
+    override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit = {
+      val reads = qe.analyzed.collect {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+          case _ => Nil
+        }
+      }.flatten
+      val writes = qe.analyzed.collect {
+        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString
+      }
+      val plan = qe.executedPlan match {
+        case c: CommandResultExec => c.commandPhysicalPlan
+        case p => p
+      }
+      val files = collectWithSubqueries(plan) { case w: DataWritingCommandExec =>
+        w.cmd.metrics.get("numFiles").map(_.value).getOrElse(0L)
+      }.sum
+      events.add((reads, writes, files))
+    }
+    override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  test("dispatchDelayed micro-batches scan neither log and append at most one file to each") {
+    val srcDir = tmp("mech_src")
+    val pendingDir = tmp("mech_pend") + "/pending"
+    val logDir = tmp("mech_log") + "/log"
+    val ckpt = tmp("mech_ckpt")
+    def stream() = spark.readStream.schema(matchedRows().schema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    def addFile(rows: (Long, String, String, Boolean, Long)*): Unit =
+      matchedRows(rows: _*).coalesce(1).write.mode("append").parquet(srcDir)
+
+    // an earlier run leaves both logs non-empty, so the restart recovers them
+    addFile((1L, "r_close", "close", false, 0L), (2L, "r_notify", "notify", true, 0L))
+    val q1 = ActionSink.dispatchDelayed(spark, stream(), pendingDir, logDir, ckpt)(_ => ())
+    try q1.processAllAvailable() finally q1.stop()
+    // three more files: three micro-batches, each staging and dispatching
+    // several rows (local rows spread over every core unless coalesced)
+    (3L to 5L).foreach(i => addFile((3 to 8).map(k =>
+      (i * 10 + k, "r_notify", "notify", true, i * 60000000L)): _*))
+    val filesBefore = dataFiles(pendingDir) + dataFiles(logDir)
+
+    val io = new IoLog
+    spark.listenerManager.register(io) // before start: the query's session clones it
+    try {
+      val q2 = ActionSink.dispatchDelayed(spark, stream(), pendingDir, logDir, ckpt)(_ => ())
+      try q2.processAllAvailable() finally q2.stop()
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(io)
+
+    def touches(paths: Seq[String], dir: String) = paths.exists(_.endsWith(dir))
+    val events = io.events.asScala.toSeq
+    val firstStage = events.indexWhere(e => touches(e._2, pendingDir))
+    assert(firstStage >= 0, "the restarted query must stage rows")
+    val scans = events.drop(firstStage).filter(e =>
+      touches(e._1, pendingDir) || touches(e._1, logDir))
+    assert(scans.isEmpty, s"micro-batches re-scanned a log: ${scans.map(_._1)}")
+    val appends = events.filter(e => touches(e._2, pendingDir) || touches(e._2, logDir))
+    assert(appends.count(e => touches(e._2, pendingDir)) == 3 &&
+      appends.count(e => touches(e._2, logDir)) == 3, s"one append per log per batch: $appends")
+    assert(appends.forall(_._3 <= 1), s"an append wrote more than one file: ${appends.map(_._3)}")
+    assert(dataFiles(pendingDir) + dataFiles(logDir) - filesBefore == appends.map(_._3).sum)
+    assert(loggedIds(logDir) == (Seq(1L, 2L) ++ (3L to 5L).flatMap(i => (3 to 8).map(i * 10 + _))))
   }
 }
