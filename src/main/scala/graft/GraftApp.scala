@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.commands.CommandParser
-import graft.rules.{RuleEngine, Rules, RuleStore}
+import graft.rules.{RuleBook, RuleEngine, Rules, RuleStore}
 import graft.streaming.{ActionSink, DelayedDispatcher, NdjsonIngest}
 import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
 
@@ -16,21 +16,22 @@ import graft.zulip.{ZulipClient, ZulipConf, ZulipRtm, ZulipSupervisor}
   *
   *   - `eventstream::watch_event_stream` → the `http-ndjson` DataSourceV2
   *     signup stream ([[NdjsonIngest.fromHttp]]), silence-supervised by the
-  *     source itself (status.rs:36-45's 90 s watchdog as
-  *     `silenceRestartMs`).
-  *   - `eventhandler::handle_events` → a foreachBatch loop that reloads the
-  *     rule FILE each micro-batch (commands mutate it concurrently — a
-  *     stream-static join would pin the file listing at plan time, the
-  *     RecoverySpec finding), matches via the broadcast rule join, and
-  *     dispatches through one [[DelayedDispatcher]] built at start (the
-  *     randomized 30–100 s hold, effectively-once; it reads the pending
-  *     and dispatch logs once per start, then only appends to them).
+  *     source itself (status.rs:36-45's 90 s watchdog, checked every 15 s,
+  *     as `silenceRestartMs`/`silenceCheckMs`).
+  *   - `eventhandler::handle_events` → a foreachBatch loop that feeds each
+  *     batch's usernames to the `seen` ring ([[RecentSignups]]), matches
+  *     via the broadcast rule join against the in-memory rules
+  *     ([[RuleBook]], loaded once at start), and dispatches through one
+  *     [[DelayedDispatcher]] built at start (the randomized 30–100 s hold,
+  *     effectively-once; it reads the pending and dispatch logs once per
+  *     start, then only appends to them).
   *   - `zulip::rtm::connect_to_zulip` + `status::status_loop` → [[ZulipRtm]]
   *     under [[ZulipSupervisor]] (300 s ping watchdog), commands dispatched
-  *     by [[commandDispatcher]] against the same rules file.
+  *     by [[commandDispatcher]] against the same [[RuleBook]].
   *   - `signup::rules::expiry_loop` → a sweep thread that runs
-  *     [[RuleStore.sweepNotices]]/[[RuleStore.sweep]] on a cadence and posts
-  *     each once-only notice to the notify stream.
+  *     [[RuleStore.sweepNotices]]/[[RuleStore.sweep]] on a cadence through
+  *     the [[RuleBook]] and posts each once-only notice to the notify
+  *     stream.
   *
   * Everything here is composition of independently-specced parts; the
   * GraftAppSpec exercises the whole loop against a live local fake feed +
@@ -67,55 +68,22 @@ object GraftApp {
     }
   }
 
-  /** Serializes every touch of the rules file. Three threads share it
-    * (Zulip commands, the expiry sweep, the per-batch reload), and a plain
-    * `load → transform → save(overwrite)` is doubly unsafe concurrently:
-    * overwrite deletes the very files the lazy load still reads
-    * (self-overwrite), and two writers stomp one `_temporary` dir. Every
-    * read therefore materializes a SNAPSHOT (localCheckpoint cuts the
-    * lineage back to the files) under the lock; writes hold the lock
-    * across the read-modify-write. The reference has the same critical
-    * section implicitly — one mpsc consumer owns the rules (main.rs:15). */
-  private val rulesLock = new Object
-
-  /** Materialized snapshot of the store — safe to use after release. */
-  private def readRules(spark: SparkSession, rulesPath: String): DataFrame =
-    rulesLock.synchronized {
-      RuleStore.load(spark, rulesPath).localCheckpoint(true)
-    }
-
-  private def mutateRules(spark: SparkSession, rulesPath: String)(
-      f: DataFrame => DataFrame): Unit =
-    rulesLock.synchronized {
-      val cur = RuleStore.load(spark, rulesPath)
-      val next = f(cur).localCheckpoint(true)
-      try RuleStore.save(next, rulesPath)
-      finally next.unpersist()
-    }
-
-  /** Zulip command dispatch against the rules FILE — the store the event
-    * pipeline reloads per micro-batch, so a command's effect reaches the
-    * very next event (the reference's in-memory handoff, made durable). */
-  def commandDispatcher(spark: SparkSession, rulesPath: String,
-      eventLogDir: String): CommandParser.Parsed => Option[String] = { p =>
-    def store = readRules(spark, rulesPath)
+  /** Zulip command dispatch against the [[RuleBook]] the event pipeline
+    * matches with, so a command's effect reaches the very next batch (the
+    * reference's in-memory handoff, written through to the rules file). */
+  def commandDispatcher(spark: SparkSession, book: RuleBook,
+      seen: RecentSignups): CommandParser.Parsed => Option[String] = { p =>
     def saveAnd(f: DataFrame => DataFrame, reply: String): Option[String] = {
-      mutateRules(spark, rulesPath)(f); Some(reply)
+      book.mutate(f); Some(reply)
     }
     p.kind match {
       case "status" => Some("I'm alive!")
       case "list" =>
-        val s = store
-        try {
-          val names = s.select(col("name")).collect().map(_.getString(0)).sorted
-          Some(if (names.isEmpty) "No rules." else names.mkString(", "))
-        } finally s.unpersist()
+        val names = book.current.select(col("name")).collect().map(_.getString(0)).sorted
+        Some(if (names.isEmpty) "No rules." else names.mkString(", "))
       case "show" =>
-        val s = store
-        try {
-          val rows = s.filter(col("name") === p.name.get).toJSON.collect()
-          Some(rows.headOption.getOrElse(s"No rule named ${p.name.get}"))
-        } finally s.unpersist()
+        val rows = book.current.filter(col("name") === p.name.get).toJSON.collect()
+        Some(rows.headOption.getOrElse(s"No rule named ${p.name.get}"))
       case "remove" => saveAnd(RuleStore.remove(_, p.name.get),
         s"Rule ${p.name.get} removed.")
       case "enable_re" => saveAnd(RuleStore.setEnabled(_, p.name.get, enabled = true),
@@ -147,28 +115,21 @@ object GraftApp {
           } catch { case e: Exception => s"error: ${e.getMessage}" }
         Some(s"Result: $verdict")
       case "namechk" =>
-        val s = store
-        try {
-          val hits = RuleEngine.namechk(spark, p.name.get, s).collect()
-          Some(if (hits.isEmpty) "No rule matches that username."
-          else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
-        } finally s.unpersist()
+        val hits = RuleEngine.namechk(spark, p.name.get, book.current).collect()
+        Some(if (hits.isEmpty) "No rule matches that username."
+        else hits.map(r => s"${r.getString(0)} -> ${r.getString(1)}").mkString("; "))
       case "seen" =>
-        val path = new org.apache.hadoop.fs.Path(eventLogDir)
-        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.exists(path)) Some("Username not seen recently")
-        else {
-          val n = spark.read.parquet(eventLogDir)
-            .filter(col("username") === p.name.get).count()
-          Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
-        }
+        val n = seen.count(p.name.get)
+        Some(if (n > 0) s"Seen: ${p.name.get} ($n events)" else "Username not seen recently")
       case _ => Some("Could not parse user command")
     }
   }
 
   /** Start the whole program. `feedUrl` is the NDJSON signup feed (the
-    * reference's event stream); rules live at `rulesPath`; actions land in
-    * `logDir` with the pending hold in `pendingDir`. */
+    * reference's event stream); rules live at `conf.rulesPath` and are
+    * loaded once, here (a store that cannot be loaded fails the start);
+    * actions land in `workDir/dispatched` with the pending hold in
+    * `workDir/pending`. */
   def start(
       spark: SparkSession,
       conf: ZulipConf,
@@ -178,10 +139,10 @@ object GraftApp {
       sweepMs: Long = 15000L,
       zulipCheckMs: Long = 1000L,
       zulipSilenceRestartMs: Long = 300000L): Handles = {
-    val rulesPath = conf.rulesPath
+    val book = new RuleBook(spark, conf.rulesPath)
+    val seen = new RecentSignups
     val pendingDir = s"$workDir/pending"
     val logDir = s"$workDir/dispatched"
-    val eventLogDir = s"$workDir/events"
     val stop = new AtomicBoolean(false)
     val client = new ZulipClient(conf, zulipBaseUrlOverride)
 
@@ -195,8 +156,9 @@ object GraftApp {
           conf.zulipNotifyStream, conf.zulipNotifyTopic)
       }
     })
-    // eventhandler.handle_events: per micro-batch, log events, reload the
-    // rule file, match, stamp deadlines, dispatch effectively-once
+    // eventhandler.handle_events: per micro-batch, remember the signups,
+    // match against the rules in memory, stamp deadlines, dispatch
+    // effectively-once
     val signups = NdjsonIngest.fromHttp(spark, feedUrl)
       .withColumn("event_id",
         graft.functions.Portable.hash64(concat_ws("|", col("username"),
@@ -205,28 +167,28 @@ object GraftApp {
     val events = signups.writeStream
       .option("checkpointLocation", s"$workDir/checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // read twice; cached so the source is scanned once, as a second scan
+        // would count every row twice in the query's progress (numInputRows)
         val b = batch.persist()
-        val rules = readRules(spark, rulesPath) // fresh snapshot per batch
         try {
-          b.write.mode("append").parquet(eventLogDir) // the `seen` memory
-          val matched = RuleEngine.matches(b, rules)
+          seen.add(b.select(col("username")).collect().map(_.getString(0)))
+          val matched = RuleEngine.matches(b, book.current)
             .select(col("event_id"), col("name").as("rule_name"),
               col("username"), col("actions"), col("no_delay"), col("ts_us"))
             .withColumn("due_us", col("ts_us") + ActionSink.actionDelayUs(
               col("event_id"), col("actions"), col("no_delay")))
           dispatcher(matched, batchId)
-        } finally { b.unpersist(); rules.unpersist() }
-        ()
+        } finally b.unpersist()
       }
       .start()
 
     // zulip rtm + status_loop: supervised command connection
     val supervisor = new ZulipSupervisor(conf, client,
-      ZulipRtm.parseOrError(commandDispatcher(spark, rulesPath, eventLogDir)),
+      ZulipRtm.parseOrError(commandDispatcher(spark, book, seen)),
       silenceRestartMs = zulipSilenceRestartMs, checkMs = zulipCheckMs)
     val zulipThread = supervisor.start(stop)
 
-    val expiryThread = startExpirySweep(spark, rulesPath, client, conf, sweepMs, stop)
+    val expiryThread = startExpirySweep(book, client, conf, sweepMs, stop)
 
     Handles(events, zulipThread, expiryThread, stop)
   }
@@ -237,8 +199,8 @@ object GraftApp {
     * The sleep is sliced so shutdown latency is ~200 ms + one in-flight
     * sweep, not the sweep cadence (an hourly-config sweep would otherwise
     * blow through shutdown's 120 s join and read as a wedged writer). */
-  private[graft] def startExpirySweep(spark: SparkSession, rulesPath: String,
-      client: ZulipClient, conf: ZulipConf, sweepMs: Long, stop: AtomicBoolean): Thread = {
+  private[graft] def startExpirySweep(book: RuleBook, client: ZulipClient,
+      conf: ZulipConf, sweepMs: Long, stop: AtomicBoolean): Thread = {
     val t = new Thread(() => {
       while (!stop.get()) {
         val end = System.currentTimeMillis() + sweepMs
@@ -254,8 +216,8 @@ object GraftApp {
             // posting happens after the save (at-most-once notices, like the
             // reference, which posts from the same pass that mutates state)
             var notices = Array.empty[(String, String)]
-            mutateRules(spark, rulesPath) { cur =>
-              val noticed = RuleStore.sweepNotices(cur, now).localCheckpoint(true)
+            book.mutate { cur =>
+              val noticed = RuleStore.sweepNotices(cur, now)
               notices = noticed.filter(col("notice").isNotNull)
                 .select(col("name"), col("notice")).collect()
                 .map(r => (r.getString(0), r.getString(1)))
@@ -278,4 +240,22 @@ object GraftApp {
     t.start()
     t
   }
+}
+
+/** The `seen` memory: the usernames of the last 10 000 signups, the
+  * reference's ring buffer (eventhandler.rs:90-116). One ring per
+  * [[GraftApp.start]]; like the reference's, it is forgotten on restart. */
+private[graft] final class RecentSignups {
+  private val ring = new Array[String](10000)
+  private var added = 0L
+
+  def add(usernames: Iterable[String]): Unit = synchronized {
+    usernames.foreach { u =>
+      ring((added % ring.length).toInt) = u
+      added += 1
+    }
+  }
+
+  /** Signups among the last 10 000 whose username is exactly `username`. */
+  def count(username: String): Int = synchronized(ring.count(username == _))
 }

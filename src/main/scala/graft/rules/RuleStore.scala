@@ -1,6 +1,8 @@
 package graft.rules
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Rule persistence (reference rules.rs:26-47: rules live in a JSON file,
@@ -26,9 +28,9 @@ object RuleStore {
     * checked and a failure THROWS rather than leaving the store silently
     * stranded in `.staged` (the staged dir still holds the data, so
     * [[load]]'s recovery path completes the swap on the next read).
-    * The delete→rename window itself is non-atomic: ALL in-process
-    * access must go through [[graft.GraftApp]]'s `rulesLock` (readers
-    * outside it can observe the store missing mid-swap). */
+    * The delete→rename window itself is non-atomic: the live loop reads
+    * the store once and then writes it only through one [[RuleBook]]
+    * (a reader outside it can observe the store missing mid-swap). */
   def save(rules: DataFrame, path: String): Unit = {
     val staged = path + ".staged"
     rules.coalesce(1).write.mode("overwrite").json(staged)
@@ -121,5 +123,33 @@ object RuleStore {
           .when(expired, lit("expired")))
       .withColumn("exp_notification",
         when(expiringSoon, lit(1)).when(expired, lit(2)).otherwise(state))
+  }
+}
+
+/** The live loop's rule set, held on the driver for one
+  * [[graft.GraftApp.start]] — the reference's in-memory rules, owned by one
+  * consumer and written through to rules.json on each change (main.rs:15,
+  * rules.rs:26-47).
+  *
+  * Construction loads the store once through [[RuleStore.load]] (which
+  * finishes a crashed save's swap) and fails if it cannot. [[current]] is a
+  * `LocalRelation` over the rows in memory: immutable, uncached, safe to use
+  * from any thread. [[mutate]] serializes every change and swaps the rows
+  * only after [[RuleStore.save]] succeeded, so memory never runs ahead of
+  * the store. Only this process writes the store, so memory is
+  * authoritative and the file is never read again.
+  */
+final class RuleBook(spark: SparkSession, path: String) {
+  private val stored = RuleStore.load(spark, path)
+  private val schema = stored.schema
+  @volatile private var rows: Seq[Row] = stored.collect().toSeq
+
+  def current: DataFrame = spark.createDataFrame(rows.asJava, schema)
+
+  /** Apply `f` to the current rules, save the result, then adopt it. */
+  def mutate(f: DataFrame => DataFrame): Unit = synchronized {
+    val next = f(current).select(schema.fieldNames.toSeq.map(col): _*).collect().toSeq
+    RuleStore.save(spark.createDataFrame(next.asJava, schema), path)
+    rows = next
   }
 }

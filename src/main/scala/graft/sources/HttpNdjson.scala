@@ -126,7 +126,6 @@ class HttpNdjsonMicroBatchStream(
   // Spark commits batch N only after planning N+1, so capping against the
   // committed offset would freeze the stream after one micro-batch
   @GuardedBy("lock") private var plannedEnd = 0L
-  @GuardedBy("lock") private var connects = 0
   @volatile private var stopped = false
   @volatile private var lastError: Throwable = _
   @volatile private var consecutiveFailures = 0
@@ -137,18 +136,11 @@ class HttpNdjsonMicroBatchStream(
   // bounds each wait for the response headers.
   private val pollMs = if (readTimeoutMs > 0) math.min(readTimeoutMs, 1000) else 1000
 
-  /** Reconnect count — observable for tests and monitoring. */
-  def connectCount: Int = lock.synchronized(connects)
-
   // ---- event-silence supervisor (status.rs:20-68) --------------------------
   // Tracks the last EVENT (offered line), not the last byte: a connection
   // kept alive by SSE comments or TCP keepalives while the feed is dead is
   // exactly the failure the reference's status loop restarts on.
   @volatile private var lastEventAtMs = System.currentTimeMillis()
-  @volatile private var silenceRestartsCount = 0
-
-  /** Watchdog-forced restarts — observable for tests and monitoring. */
-  def silenceRestarts: Int = silenceRestartsCount
 
   private val watchdog: Option[Thread] =
     if (silenceRestartMs <= 0) None
@@ -162,7 +154,6 @@ class HttpNdjsonMicroBatchStream(
               System.currentTimeMillis() - lastEventAtMs > silenceRestartMs) {
             logWarning(s"http-ndjson: no event for >$silenceRestartMs ms — " +
               "restarting event stream watcher")
-            silenceRestartsCount += 1
             lastEventAtMs = System.currentTimeMillis() // status.rs:38 resets the clock
             restartRequested = true // reader loop reconnects after backoff
           }
@@ -182,7 +173,6 @@ class HttpNdjsonMicroBatchStream(
           restartRequested = false
           val in = new BufferedReader(
             new InputStreamReader(new PolledStream(c.getInputStream), StandardCharsets.UTF_8))
-          lock.synchronized { connects += 1 }
           consecutiveFailures = 0
           lastEventAtMs = System.currentTimeMillis() // fresh connection, fresh clock
           try {

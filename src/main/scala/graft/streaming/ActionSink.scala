@@ -8,44 +8,28 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-/** Effectively-once action dispatch — the reference's rule-action firing
-  * (rules.rs:286-331: matched signup → mod-API endpoint call, optionally
-  * delayed) as a restart-safe Spark sink.
+/** Effectively-once, delayed action dispatch — the reference's rule-action
+  * firing (rules.rs:286-331: matched signup → mod-API endpoint call,
+  * optionally delayed) as a restart-safe Spark sink.
   *
   * Structured Streaming's `foreachBatch` is at-least-once across restarts:
-  * a batch that dispatched but crashed before the commit re-runs. The
-  * dispatcher makes the side effect idempotent the standard way — an
-  * append-only dispatch log keyed by (event_id, rule_name); each batch
-  * anti-joins the log before acting, so replays of LOGGED rows are no-ops.
-  * The remaining window is a crash BETWEEN `act` and the log append: that
-  * batch's fresh rows re-dispatch once on restart (dispatch-then-log keeps
-  * at-least-once — the reference's mod-API calls are idempotent bans/marks,
-  * where a duplicate POST is harmless and a LOST one is not; logging first
-  * would invert that into at-most-once). The log carries `batch_id` as the
-  * audit trail the reference keeps implicitly in Zulip history.
-  * [[dispatchDelayed]] keeps the same guarantees over a pending log and the
-  * dispatch log, but reads them once per start ([[DelayedDispatcher]]).
+  * a batch that dispatched but crashed before the commit re-runs. A
+  * [[DelayedDispatcher]] makes the side effect idempotent with two
+  * append-only logs keyed by (event_id, rule_name), read once per start:
+  * a pending log of every staged row and a dispatch log of every row acted
+  * on, so a replayed batch stages and dispatches nothing again. The
+  * remaining window is a crash BETWEEN `act` and the dispatch-log append:
+  * that batch's due rows re-dispatch once on restart (dispatch-then-log
+  * keeps at-least-once — the reference's mod-API calls are idempotent
+  * bans/marks, where a duplicate POST is harmless and a LOST one is not;
+  * logging first would invert that into at-most-once). The dispatch log
+  * carries `batch_id` as the audit trail the reference keeps implicitly in
+  * Zulip history.
   *
   * `act` stands in for the HTTP call (the reference's POST to the mod API);
   * it receives only rows never dispatched before.
   */
 object ActionSink {
-
-  def dispatch(spark: SparkSession, matched: DataFrame, logDir: String,
-      checkpointDir: String)(act: DataFrame => Unit): StreamingQuery =
-    matched.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fresh = undispatched(spark, batch, logDir)
-          .persist() // evaluated twice: act + log append
-        try {
-          act(fresh)
-          fresh.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(logDir)
-        } finally fresh.unpersist()
-        ()
-      }
-      .start()
 
   /** Deterministic analog of the reference's randomized action delay
     * (eventhandler.rs:115: `thread_rng().gen_range(30..100) * 1000` ms,
@@ -96,17 +80,6 @@ object ActionSink {
       val name = s.getPath.getName
       s.isFile && !name.startsWith("_") && !name.startsWith(".")
     }
-  }
-
-  /** Rows of `batch` not yet in the dispatch log (dedup within the batch,
-    * then anti-join against the log). Only a log with no committed data
-    * file means "everything is fresh" — a transient read failure (IO error,
-    * corrupt footer) must propagate, not silently re-arm every past action. */
-  def undispatched(spark: SparkSession, batch: DataFrame, logDir: String): DataFrame = {
-    val deduped = batch.dropDuplicates("event_id", "rule_name")
-    if (!hasData(spark, logDir)) return deduped // no log yet: everything is fresh
-    val logged = spark.read.parquet(logDir).select(col("event_id"), col("rule_name"))
-    deduped.join(logged, Seq("event_id", "rule_name"), "left_anti")
   }
 }
 

@@ -54,13 +54,17 @@ object NdjsonIngest {
   /** Signup events straight off the HTTP chunked NDJSON feed — the exact
     * shape of the reference's ingest (eventstream.rs:14-73), via the custom
     * `http-ndjson` DataSourceV2 source (graft.sources.HttpNdjsonSourceProvider)
-    * with the reference's 7 s reconnect backoff as the default. */
+    * with the reference's 7 s reconnect backoff as the default, and its
+    * status loop's watchdog (status.rs:36-45, 73): the connection restarts
+    * when no event arrived for 90 s, checked every 15 s. */
   def fromHttp(spark: SparkSession, url: String,
       reconnectDelayMs: Long = 7000L, sse: Boolean = false): DataFrame =
     parse(spark.readStream.format("http-ndjson")
       .option("url", url)
       .option("mode", if (sse) "sse" else "ndjson")
       .option("reconnectDelayMs", reconnectDelayMs)
+      .option("silenceRestartMs", 90000L)
+      .option("silenceCheckMs", 15000L)
       .load())
       .filter(!col("malformed") && col("t") === "signup")
       .drop("malformed", "raw", "t")

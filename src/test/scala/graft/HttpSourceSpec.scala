@@ -324,6 +324,16 @@ class HttpSourceSpec extends AnyFunSuite {
     } finally { q.stop(); server.stop(0) }
   }
 
+  test("NdjsonIngest.fromHttp arms the reference's 90 s event-silence watchdog") {
+    val opts = graft.streaming.NdjsonIngest.fromHttp(spark, "http://localhost:1/feed")
+      .queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 => r.extraOptions
+      }
+    assert(opts.size == 1)
+    assert(opts.head.getLong("silenceRestartMs", 0L) == 90000L &&
+      opts.head.getLong("silenceCheckMs", 0L) == 15000L)
+  }
+
   test("stop() returns on an open, silent feed and the reader thread exits cleanly") {
     val release = new CountDownLatch(1)
     val (server, url) = serve("/quiet") { (_, ex) =>

@@ -7,13 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{ActionSink, DelayedDispatcher}
@@ -26,16 +21,6 @@ class RecoverySpec extends AnyFunSuite {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
-
-  /** events split into two parquet files so the file source has two
-    * distinct micro-batches to discover. */
-  private def splitEvents(): String = {
-    val dir = tmp("ev_split")
-    val ev = Tables(spark, sf).events
-    ev.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(dir)
-    ev.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(dir)
-    dir
-  }
 
   test("grouped counts survive a stop/restart on the same checkpoint") {
     val srcDir = tmp("ev_incr")
@@ -160,32 +145,6 @@ class RecoverySpec extends AnyFunSuite {
     assert(resumed.sameElements(batch))
   }
 
-  test("action dispatch is effectively-once across a replayed batch") {
-    import spark.implicits._
-    val logDir = tmp("dispatch_log") + "/log"
-    val batch = Seq((1L, "r_a", "close"), (2L, "r_b", "notify"), (1L, "r_a", "close"))
-      .toDF("event_id", "rule_name", "actions")
-    var acted = Seq.empty[(Long, String)]
-    def act(df: org.apache.spark.sql.DataFrame): Unit =
-      acted ++= df.select("event_id", "rule_name").as[(Long, String)].collect()
-
-    // first delivery: in-batch duplicate collapses, both rules fire once
-    val fresh1 = graft.streaming.ActionSink.undispatched(spark, batch, logDir)
-    act(fresh1); fresh1.write.mode("append").parquet(logDir)
-    assert(acted.sorted == Seq((1L, "r_a"), (2L, "r_b")))
-
-    // replay of the same batch (the at-least-once case): nothing re-fires
-    val fresh2 = graft.streaming.ActionSink.undispatched(spark, batch, logDir)
-    act(fresh2)
-    assert(acted.size == 2, "replayed batch must not re-dispatch")
-
-    // a genuinely new match still goes out
-    val batch2 = Seq((3L, "r_a", "close")).toDF("event_id", "rule_name", "actions")
-    val fresh3 = graft.streaming.ActionSink.undispatched(spark, batch2, logDir)
-    act(fresh3); fresh3.write.mode("append").parquet(logDir)
-    assert(acted.sorted == Seq((1L, "r_a"), (2L, "r_b"), (3L, "r_a")))
-  }
-
   test("dispatchDelayed holds actions until the event-time clock passes their deadline") {
     import spark.implicits._
     val srcDir = tmp("delay_src")
@@ -229,22 +188,6 @@ class RecoverySpec extends AnyFunSuite {
     // full replay on a FRESH checkpoint (at-least-once): nothing re-fires
     run(tmp("delay_ckpt3"))
     assert(spark.read.parquet(logDir).count() == 3, "effectively-once after restart")
-  }
-
-  test("ActionSink.dispatch end-to-end over a streaming source") {
-    val srcDir = splitEvents()
-    val logDir = tmp("dispatch_e2e") + "/log"
-    val ckpt = tmp("ckpt_e2e")
-    val schema = Tables(spark, sf).events.schema
-    val matched = spark.readStream.schema(schema).parquet(srcDir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id"), lit("r_stream").as("rule_name"))
-    val q = graft.streaming.ActionSink.dispatch(spark, matched, logDir, ckpt)(_ => ())
-    try q.processAllAvailable() finally q.stop()
-    val logged = spark.read.parquet(logDir)
-    val expected = Tables(spark, sf).events.filter(col("event_type") === "signup").count()
-    assert(logged.count() == expected)
-    assert(logged.select("event_id").distinct().count() == expected, "no duplicate dispatches")
   }
 
   test("RuleStore: a crash between delete and rename recovers from the staged dir") {
@@ -302,10 +245,12 @@ class RecoverySpec extends AnyFunSuite {
     val logDir = tmp("rec_log") + "/log"
 
     // first process: a delayed close at t=0 (deadline in [31.5, 101.5) s)
-    // stays pending; the undelayed notify at t=10 s dispatches
+    // stays pending; the undelayed notify at t=10 s, given twice in the
+    // batch, dispatches once
     val first = new Recorder
     new DelayedDispatcher(spark, pendingDir, logDir)(first.act)(
       matchedRows((1L, "r_close", "close", false, 0L),
+        (2L, "r_notify", "notify", false, 10000000L),
         (2L, "r_notify", "notify", false, 10000000L)), 0L)
     assert(first.ids == Seq(2L))
     // ...and a batch that was staged but crashed before its dispatch
@@ -392,32 +337,6 @@ class RecoverySpec extends AnyFunSuite {
     d(matchedRows((1L, "r_notify", "notify", true, 0L)), 0L)
     assert(rec.ids == Seq(1L))
     assert(loggedIds(pendingDir) == Seq(1L) && loggedIds(logDir) == Seq(1L))
-  }
-
-  /** Every successful Spark action, in delivery order: the paths it read,
-    * the paths it wrote, and the data files its write added. */
-  private final class IoLog extends QueryExecutionListener with AdaptiveSparkPlanHelper {
-    val events = new ConcurrentLinkedQueue[(Seq[String], Seq[String], Long)]()
-    override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit = {
-      val reads = qe.analyzed.collect {
-        case l: LogicalRelation => l.relation match {
-          case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
-      val writes = qe.analyzed.collect {
-        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString
-      }
-      val plan = qe.executedPlan match {
-        case c: CommandResultExec => c.commandPhysicalPlan
-        case p => p
-      }
-      val files = collectWithSubqueries(plan) { case w: DataWritingCommandExec =>
-        w.cmd.metrics.get("numFiles").map(_.value).getOrElse(0L)
-      }.sum
-      events.add((reads, writes, files))
-    }
-    override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 
   test("dispatchDelayed micro-batches scan neither log and append at most one file to each") {
